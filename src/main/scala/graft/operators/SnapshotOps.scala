@@ -1147,7 +1147,7 @@ object SnapshotOps {
     val orders = ordersDf(s, d)
     val (root, mk) = cloneBase(s, d, "snaprace")
     val v0 = GraftCatalog.snapshotVersions(s, root).last
-    GraftCatalog.cowPublishFault.put(root, new Runnable {
+    GraftCatalog.publishFault.put(root, new Runnable {
       def run(): Unit = {
         GraftCatalog.commitSnapshot(
           orders.where(col("o_orderkey") % 500 === 0)

@@ -1923,8 +1923,18 @@ object GraftCatalog {
     val (batch, newFiles, newStatuses, batchObs) = writeBatch(spark, fs, r, df)
     val newStats = batchFileStats(spark, newFiles, fsMetaOf(newStatuses),
       readBloomConfAt(fs, r), batchObs)
-    var attempt = 0
-    while (true) {
+    // A PINNED commit never retries AT ITS PINNED VERSION: the number
+    // is fixed, so that slot is permanently lost. But a pinned
+    // CONTENT-PRESERVING rewrite (`rewriteOf` = the files it consumed)
+    // gets Iceberg's RewriteFiles validation: if the concurrent commit
+    // left every consumed file alive and added no delete content over
+    // them, the already-written batch RE-PUBLISHES against the new head
+    // at metadata price — the difference between compaction that lands
+    // under steady ingest and compaction that starves. Only a genuine
+    // overlap (a CoW rewrite of a consumed file, a new DV/eqdel covering
+    // one, a schema flip) falls through to the abort+replan path.
+    val retries = if (expectedHead.isDefined) 0 else maxRetries
+    retrying(retries) { attempt =>
       val versions = snapshotVersions(spark, root)
       // `expectedHead` PINS the commit's base (a REWRITE's contract —
       // compaction preserves content, so publishing a stale version's
@@ -2003,49 +2013,15 @@ object GraftCatalog {
         if (append && baseV.nonEmpty)
           baseRaw.filter(l => l.startsWith("#include:") || !l.startsWith("#"))
         else Seq.empty
-      try {
-        publishManifest(fs, r, next,
-          Seq(s"#stats:$statsName", schemaLine) ++ dvCarried ++ meta ++ carriedRaw ++ newFiles)
-        return next
-      } catch {
-        case e: SnapshotConflictException =>
-          fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), statsName), false)
-          attempt += 1
-          // A PINNED commit never retries AT ITS PINNED VERSION: the
-          // number is fixed, so that slot is permanently lost. But a
-          // pinned CONTENT-PRESERVING rewrite (`rewriteOf` = the files
-          // it consumed) gets Iceberg's RewriteFiles validation first:
-          // if the concurrent commit left every consumed file alive and
-          // added no delete content over them, the already-written
-          // batch RE-PUBLISHES against the new head at metadata price —
-          // the difference between compaction that lands under steady
-          // ingest and compaction that starves. Only a genuine overlap
-          // (a CoW rewrite of a consumed file, a new DV/eqdel covering
-          // one, a schema flip) falls through to the abort+replan path.
-          if (expectedHead.isDefined && rewriteOf.isDefined) {
-            try return republishPinnedRewrite(spark, fs, r,
-              expectedHead.get, rewriteOf.get, newFiles, newStats,
-              schemaLine, meta, carriesLines = append, e)
-            catch {
-              case e2: SnapshotConflictException =>
-                fs.delete(batch, true)
-                throw e2
-            }
-          }
-          if (expectedHead.isDefined || attempt > maxRetries) {
-            fs.delete(batch, true) // don't orphan the unpublished batch
-            throw e
-          }
-          // Jittered linear backoff before replanning against the new
-          // head: an immediate retry puts N racing appenders straight
-          // back into the same claim window — under real contention
-          // (many streaming sinks on one table) that is quadratic
-          // wasted work. Capped so a lone retry never stalls a commit.
-          Thread.sleep(math.min(200L, attempt * 20L) +
-            scala.util.Random.nextInt(20).toLong)
-      }
+      commitAt(fs, r, next,
+        Seq(s"#stats:$statsName", schemaLine) ++ dvCarried ++ meta ++ carriedRaw ++ newFiles,
+        attemptFiles = Seq(new org.apache.hadoop.fs.Path(manifestDir(r), statsName)),
+        // the batch is written ONCE: only the last attempt owns its undo
+        ownedFiles = if (attempt == retries) Seq(batch) else Nil,
+        revalidate = for (pin <- expectedHead; consumed <- rewriteOf) yield
+          republishPinnedRewrite(spark, fs, r, pin, consumed, newFiles, newStats,
+            schemaLine, meta, carriesLines = append, RevalidateRetries)(_))
     }
-    -1L // unreachable
   }
 
   /** Metadata-priced conflict RE-VALIDATION for pinned content-
@@ -2096,20 +2072,24 @@ object GraftCatalog {
     * level starvation the r15 rewrite fix left one level down. */
   /** `mustStayLive` (r17): files that must still be in the head's
     * list for the re-publish to stand WITHOUT being swapped out —
-    * the targets of grafted MoR delete lines (`extraDvLines`), whose
+    * the targets of grafted MoR delete lines (`graftLines`), whose
     * deletes would silently strand if a racer rewrote the file they
-    * cover. `extraDvLines` publish alongside the carried head lines;
-    * union application is idempotent, so overlap with racer sidecars
-    * is harmless. */
+    * cover. `graftLines` runs once per validated attempt and returns
+    * the lines to publish alongside the carried head lines (their
+    * sidecars are the attempt's own: a lost claim deletes them); union
+    * application is idempotent, so overlap with racer sidecars is
+    * harmless. Each attempt re-reads the head; `maxRetries` bounds the
+    * re-publishes after the first. */
   private def republishPinnedRewrite(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
       pinBase: Long, consumed: Set[String], newFiles: Seq[String],
       newStats: Seq[FileStat], schemaLine: String, meta: Seq[String],
-      carriesLines: Boolean, original: SnapshotConflictException,
+      carriesLines: Boolean, maxRetries: Int,
       scopeDisjoint: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None,
       mustStayLive: Set[String] = Set.empty,
-      extraDvLines: Seq[String] = Seq.empty,
-      racerDeletesOutOfScope: Boolean = false): Long = {
+      graftLines: () => Seq[String] = () => Seq.empty,
+      racerDeletesOutOfScope: Boolean = false)(
+      original: SnapshotConflictException): Long = {
     def dvEq(lines: Seq[String]) =
       lines.filter(l => l.startsWith("#dv:") || l.startsWith("#eqdel:")).toSet
     val baseLines = readManifestLines(fs, r, pinBase)
@@ -2117,84 +2097,70 @@ object GraftCatalog {
     val baseFiles = baseLines.filterNot(_.startsWith("#")).toSet
     val baseDvEq = dvEq(baseLines)
     val tz = spark.sessionState.conf.sessionLocalTimeZone
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
+    retrying(maxRetries) { _ =>
       val head = versionsAt(fs, r).last
       val headLines = readManifestLines(fs, r, head)
       val headFiles = headLines.filterNot(_.startsWith("#"))
       val headDvEq = dvEq(headLines)
-      val safe =
-        (consumed ++ mustStayLive).subsetOf(headFiles.toSet) &&
-          headLines.find(_.startsWith("#schema:")) == baseSchema &&
-          baseDvEq.subsetOf(headDvEq) &&
-          !deleteLinesTouch(spark, r, (headDvEq -- baseDvEq).toSeq, consumed)
-      if (!safe) throw original
       // Verb scope proof: every file the racer(s) ADDED since the pin
       // base must be provably outside the verb's scope. Metadata-only:
       // one stats-sidecar read + per-file envelope/tuple evaluation.
-      scopeDisjoint.foreach { scope =>
+      //
+      // TRANSACTION bodies additionally demand the racer's new DELETE
+      // content be provably out of scope (r17): a verb's read-set is
+      // exactly its consumed files (a candidate holding a matching row
+      // would have been consumed, so a racer DV on a non-consumed file
+      // provably touches no row the verb cared about), but a tx body
+      // can READ in-scope rows from files it never rewrote (an audit
+      // aggregate) — a racer MoR delete on such a row makes the body's
+      // output match neither serial order. Proof obligation: every
+      // file a racer-added #dv:/#eqdel: line covers has a stats
+      // envelope provably DISJOINT from the scope (then the deleted
+      // rows are out of scope too). Unprovable → the strict abort
+      // stands.
+      def scopeProof(scope: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = {
         val racerNew = headFiles.filterNot(baseFiles).filterNot(newFiles.toSet)
-        // TRANSACTION bodies additionally demand the racer's new
-        // DELETE content be provably out of scope (r17): a verb's
-        // read-set is exactly its consumed files (a candidate holding
-        // a matching row would have been consumed, so a racer DV on a
-        // non-consumed file provably touches no row the verb cared
-        // about), but a tx body can READ in-scope rows from files it
-        // never rewrote (an audit aggregate) — a racer MoR delete on
-        // such a row makes the body's output match neither serial
-        // order. Proof obligation: every file a racer-added
-        // #dv:/#eqdel: line covers has a stats envelope provably
-        // DISJOINT from the scope (then the deleted rows are out of
-        // scope too). Unprovable → the strict abort stands.
-        val racerDvOk = !racerDeletesOutOfScope || {
-          val racerDvNew = (headDvEq -- baseDvEq).toSeq
-          racerDvNew.isEmpty || {
-            val csHead0 = readSchemaLine(fs, r, head)
-            val consult0 = statsLogical(readStats(spark, r.toString, head), csHead0)
-            val ptSpec0 = readPartitionSpecsAt(fs, r)
-            val ptSchema0 = if (ptSpec0.isEmpty) None else csHead0
-            deleteLineTargets(spark, r, racerDvNew).forall { f =>
-              consult0.get(f).exists(st => !mayContain(st, scope, tz)) ||
-                !tupleMayMatch(ptSpec0, ptSchema0, f, scope, tz)
-            }
-          }
-        }
-        if (!racerDvOk) throw original
-        if (racerNew.nonEmpty) {
+        val racerDvNew =
+          if (racerDeletesOutOfScope) (headDvEq -- baseDvEq).toSeq else Seq.empty
+        lazy val outOfScope: String => Boolean = {
           val csHead = readSchemaLine(fs, r, head)
           val consult = statsLogical(readStats(spark, r.toString, head), csHead)
           val ptSpec = readPartitionSpecsAt(fs, r)
           val ptSchema = if (ptSpec.isEmpty) None else csHead
-          val provablyOut = racerNew.forall { f =>
-            consult.get(f).exists(st => !mayContain(st, scope, tz)) ||
-              !tupleMayMatch(ptSpec, ptSchema, f, scope, tz)
-          }
-          if (!provablyOut) throw original
+          f => consult.get(f).exists(st => !mayContain(st, scope, tz)) ||
+            !tupleMayMatch(ptSpec, ptSchema, f, scope, tz)
         }
+        (racerDvNew.isEmpty ||
+          deleteLineTargets(spark, r, racerDvNew).forall(f => outOfScope(f))) &&
+          racerNew.forall(f => outOfScope(f))
       }
-      val carriedFiles = headFiles.filterNot(consumed)
-      // structural carry + chained stats, like commitCow: the
-      // re-publish only rewrites manifest text for segments the
-      // rewrite actually consumed files from
-      val statsName = writeStatsDelta(spark, fs, r,
-        readManifestRawLines(fs, r, head)
-          .find(_.startsWith("#stats:")).map(_.stripPrefix("#stats:")),
-        newStats, liveAtFlatten = carriedFiles.toSet ++ newFiles)
-      val dvLines =
-        ((if (carriesLines) headDvEq else headDvEq -- baseDvEq)
-          ++ extraDvLines).toSeq.distinct.sorted
-      try {
-        publishManifest(fs, r, head + 1,
+      val safe =
+        (consumed ++ mustStayLive).subsetOf(headFiles.toSet) &&
+          headLines.find(_.startsWith("#schema:")) == baseSchema &&
+          baseDvEq.subsetOf(headDvEq) &&
+          !deleteLinesTouch(spark, r, (headDvEq -- baseDvEq).toSeq, consumed) &&
+          scopeDisjoint.forall(scopeProof)
+      if (!safe) None
+      else {
+        val carriedFiles = headFiles.filterNot(consumed)
+        // structural carry + chained stats, like commitCow: the
+        // re-publish only rewrites manifest text for segments the
+        // rewrite actually consumed files from
+        val statsName = writeStatsDelta(spark, fs, r,
+          readManifestRawLines(fs, r, head)
+            .find(_.startsWith("#stats:")).map(_.stripPrefix("#stats:")),
+          newStats, liveAtFlatten = carriedFiles.toSet ++ newFiles)
+        val grafted = graftLines()
+        val dvLines =
+          ((if (carriesLines) headDvEq else headDvEq -- baseDvEq)
+            ++ grafted).toSeq.distinct.sorted
+        Some(commitAt(fs, r, head + 1,
           Seq(s"#stats:$statsName", schemaLine) ++ dvLines ++ meta ++
-            carriedDataRawExcluding(fs, r, head, consumed) ++ newFiles)
-        return head + 1
-      } catch {
-        case _: SnapshotConflictException =>
-          fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), statsName), false)
+            carriedDataRawExcluding(fs, r, head, consumed) ++ newFiles,
+          attemptFiles = new org.apache.hadoop.fs.Path(manifestDir(r), statsName) +:
+            deleteLinePaths(r, grafted)))
       }
-    }
-    throw original
+    }.getOrElse(throw original)
   }
 
   /** Does any of these `#dv:`/`#eqdel:` manifest lines reference a
@@ -2734,18 +2700,8 @@ object GraftCatalog {
   def deleteSnapshotWhere(spark: SparkSession, root: String,
       pred: Column, meta: Seq[String] = Seq.empty): Long = {
     val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
-    val stats = readStats(spark, root, head)
-    val consult = statsLogical(stats, cs)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-    val ptSpec = readPartitionSpecsAt(fs, r)
-    val ptSchema = if (ptSpec.isEmpty) None else cs
-    val candidates = files.filter(f =>
-      consult.get(f).forall(st => mayContain(st, predExpr, tz)) &&
-        tupleMayMatch(ptSpec, ptSchema, f, predExpr, tz))
+    val PredScope(head, files, cs, stats, candidates) =
+      predScope(spark, fs, r, root, pred)
     val matchedFiles: Set[String] = pinFilesWhere(spark, candidates, pred, cs)
     if (matchedFiles.isEmpty) return head
     val carried = files.filterNot(matchedFiles)
@@ -2982,17 +2938,10 @@ object GraftCatalog {
     val carriedMeta = readManifestLines(fs, r, head).filter(l =>
       l.startsWith("#stats:") || l.startsWith("#schema:") ||
         l.startsWith("#dv:") || l.startsWith("#eqdel:"))
-    try {
-      val next = head + 1
-      publishManifest(fs, r, next,
-        carriedMeta ++ (s"#eqdel:$name:${physPks.mkString(",")}" +: meta) ++
-          carriedDataRaw(fs, r, head))
-      next
-    } catch {
-      case e: SnapshotConflictException =>
-        fs.delete(base, true)
-        throw e
-    }
+    commitAt(fs, r, head + 1,
+      carriedMeta ++ (s"#eqdel:$name:${physPks.mkString(",")}" +: meta) ++
+        carriedDataRaw(fs, r, head),
+      ownedFiles = Seq(base))
   }
 
   /** EXACTLY-ONCE streaming equality delete — [[deleteSnapshotKeysMor]]
@@ -3111,6 +3060,17 @@ object GraftCatalog {
         s"#eqdel:$newName:${physPks.mkString(",")}"
     }
 
+  /** The sidecar directories a set of manifest lines' `#dv:`/`#eqdel:`
+    * entries name under `r`'s `_deletes/` (other lines are skipped). */
+  private def deleteLinePaths(r: org.apache.hadoop.fs.Path,
+      lines: Seq[String]): Seq[org.apache.hadoop.fs.Path] = lines.collect {
+    case l if l.startsWith("#dv:") =>
+      new org.apache.hadoop.fs.Path(deletesDir(r), l.stripPrefix("#dv:"))
+    case l if l.startsWith("#eqdel:") =>
+      new org.apache.hadoop.fs.Path(deletesDir(r),
+        parseEqDel(l.stripPrefix("#eqdel:"))._1)
+  }
+
   /** Every data-file path a set of `#dv:`/`#eqdel:` lines still
     * references — DV `__path` values, eqdel cover sets. Metadata-sized
     * reads (sidecars are deleted-rows-sized by construction), used
@@ -3157,17 +3117,7 @@ object GraftCatalog {
   def deleteSnapshotWhereMor(spark: SparkSession, root: String,
       pred: Column, meta: Seq[String] = Seq.empty): Long = {
     val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
-    val stats = statsLogical(readStats(spark, root, head), cs)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-    val ptSpec = readPartitionSpecsAt(fs, r)
-    val ptSchema = if (ptSpec.isEmpty) None else cs
-    val candidates = files.filter(f =>
-      stats.get(f).forall(st => mayContain(st, predExpr, tz)) &&
-        tupleMayMatch(ptSpec, ptSchema, f, predExpr, tz))
+    val PredScope(head, _, cs, _, candidates) = predScope(spark, fs, r, root, pred)
     if (candidates.isEmpty) return head
     // position keys derive from `_metadata` BELOW the logical-name
     // projection; the predicate (logical names) applies above it
@@ -3193,16 +3143,9 @@ object GraftCatalog {
     val carriedMeta = readManifestLines(fs, r, head).filter(l =>
       l.startsWith("#stats:") || l.startsWith("#schema:") ||
         l.startsWith("#dv:") || l.startsWith("#eqdel:"))
-    try {
-      val next = head + 1
-      publishManifest(fs, r, next,
-        carriedMeta ++ (s"#dv:$name" +: meta) ++ carriedDataRaw(fs, r, head))
-      next
-    } catch {
-      case e: SnapshotConflictException =>
-        fs.delete(new org.apache.hadoop.fs.Path(deletesDir(r), name), true)
-        throw e
-    }
+    commitAt(fs, r, head + 1,
+      carriedMeta ++ (s"#dv:$name" +: meta) ++ carriedDataRaw(fs, r, head),
+      ownedFiles = Seq(new org.apache.hadoop.fs.Path(deletesDir(r), name)))
   }
 
   /** MERGE-ON-READ row-level UPDATE: `UPDATE t SET … WHERE pred` as a
@@ -3219,18 +3162,8 @@ object GraftCatalog {
       pred: Column, set: Seq[(String, Column)],
       meta: Seq[String] = Seq.empty): Long = {
     val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
-    val stats = readStats(spark, root, head)
-    val consult = statsLogical(stats, cs)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-    val ptSpec = readPartitionSpecsAt(fs, r)
-    val ptSchema = if (ptSpec.isEmpty) None else cs
-    val candidates = files.filter(f =>
-      consult.get(f).forall(st => mayContain(st, predExpr, tz)) &&
-        tupleMayMatch(ptSpec, ptSchema, f, predExpr, tz))
+    val PredScope(head, files, cs, stats, candidates) =
+      predScope(spark, fs, r, root, pred)
     if (candidates.isEmpty) return head
     val hit = liveRowsWithPos(spark, fs, r, head, candidates)
       .where(coalesce(pred, lit(false)))
@@ -3320,18 +3253,13 @@ object GraftCatalog {
     }
     val carriedMeta = lines.filter(l =>
       l.startsWith("#stats:") || l.startsWith("#schema:") || l.startsWith("#dv:"))
-    def publish(extraDv: Option[String], cleanup: => Unit): Long = {
-      val next = head + 1
-      try {
-        publishManifest(fs, r, next,
-          carriedMeta ++ extraDv.map(n => s"#dv:$n").toSeq ++
-            ("#rewrite:eqdels" +: meta) ++ carriedDataRaw(fs, r, head))
-        next
-      } catch {
-        case e: SnapshotConflictException => cleanup; throw e
-      }
-    }
-    if (hits.isEmpty) return publish(None, ())
+    def publish(extraDv: Option[String]): Long =
+      commitAt(fs, r, head + 1,
+        carriedMeta ++ extraDv.map(n => s"#dv:$n").toSeq ++
+          ("#rewrite:eqdels" +: meta) ++ carriedDataRaw(fs, r, head),
+        ownedFiles = extraDv.map(n =>
+          new org.apache.hadoop.fs.Path(deletesDir(r), n)).toSeq)
+    if (hits.isEmpty) return publish(None)
     val matched = hits.reduce(_ unionAll _).distinct()
     val fresh = dvDf(spark, r, priorDvNames)
       .fold(matched)(p => matched.join(p, Seq("__path", "__pos"), "left_anti"))
@@ -3342,9 +3270,8 @@ object GraftCatalog {
       // every eqdel row was already positionally dead (or matched
       // nothing live): the lines still drop, no new DV needed
       fs.delete(dvPath, true)
-      publish(None, ())
-    } else
-      publish(Some(name), fs.delete(dvPath, true))
+      publish(None)
+    } else publish(Some(name))
   }
 
   /** Composite-key [[mergeSnapshotMor]] — tuple-keyed DV shadowing. */
@@ -3432,15 +3359,10 @@ object GraftCatalog {
           .write.parquet(new org.apache.hadoop.fs.Path(deletesDir(r), n).toString)
         Some(n)
       }
-    try {
-      commitCow(spark, fs, r, head, carried = files, carriedStats = stats,
-        newData = newData, meta = dvName.map(n => s"#dv:$n").toSeq ++ meta)
-    } catch {
-      case e: SnapshotConflictException =>
-        dvName.foreach(n => fs.delete(
-          new org.apache.hadoop.fs.Path(deletesDir(r), n), true))
-        throw e
-    }
+    commitCow(spark, fs, r, head, carried = files, carriedStats = stats,
+      newData = newData, meta = dvName.map(n => s"#dv:$n").toSeq ++ meta,
+      ownedFiles = dvName.map(n =>
+        new org.apache.hadoop.fs.Path(deletesDir(r), n)).toSeq)
   }
 
   /** PER-FILE key nomination for the copy-on-write verbs: the files
@@ -3563,6 +3485,33 @@ object GraftCatalog {
     }.reduce(_ && _))
   }
 
+  /** The head a predicate verb plans against: its files, committed
+    * schema and (physical-name) stats, and the `candidates` whose stats
+    * envelopes and partition tuples may hold a row matching `pred`. */
+  private final case class PredScope(head: Long, files: Seq[String],
+      cs: Option[org.apache.spark.sql.types.StructType],
+      stats: Map[String, FileStat], candidates: Seq[String])
+
+  /** The shared front half of the predicate verbs: read the head and
+    * nominate its candidate files for `pred` from metadata alone. */
+  private def predScope(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
+      root: String, pred: Column): PredScope = {
+    val head = snapshotVersions(spark, root).last
+    val files = readManifest(fs, r, head)
+    val cs = readSchemaLine(fs, r, head)
+    val stats = readStats(spark, root, head)
+    val consult = statsLogical(stats, cs)
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
+    val ptSpec = readPartitionSpecsAt(fs, r)
+    val ptSchema = if (ptSpec.isEmpty) None else cs
+    val candidates = files.filter(f =>
+      consult.get(f).forall(st => mayContain(st, predExpr, tz)) &&
+        tupleMayMatch(ptSpec, ptSchema, f, predExpr, tz))
+    PredScope(head, files, cs, stats, candidates)
+  }
+
   /** One `input_file_name` pass over the stats-nominated candidates:
     * the manifest paths of files with ≥1 row satisfying `pred` — the
     * PIN step shared by every copy-on-write verb. */
@@ -3586,13 +3535,16 @@ object GraftCatalog {
     * metadata price. `scopePred` is a THUNK evaluated only on the
     * conflict path (a merge's key envelope costs one agg over the
     * source — never paid on the conflict-free fast path); `None` from
-    * the thunk means "no provable scope" and keeps the strict abort. */
+    * the thunk means "no provable scope" and keeps the strict abort.
+    * `ownedFiles` are the caller's own pre-commit writes (a MoR verb's
+    * DV sidecar) that an abort deletes along with the batch. */
   private def commitCow(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: org.apache.hadoop.fs.Path,
       head: Long, carried: Seq[String], carriedStats: Map[String, FileStat],
       newData: DataFrame, meta: Seq[String],
       rewriteOf: Option[Set[String]] = None,
-      scopePred: Option[() => Option[Column]] = None): Long = {
+      scopePred: Option[() => Option[Column]] = None,
+      ownedFiles: Seq[org.apache.hadoop.fs.Path] = Seq.empty): Long = {
     val (batch, newFiles, newStatuses, batchObs) = writeBatch(spark, fs, r, newData)
     val newStats = batchFileStats(spark, newFiles, fsMetaOf(newStatuses),
       readBloomConfAt(fs, r), batchObs)
@@ -3631,49 +3583,28 @@ object GraftCatalog {
     // in no covered set)
     val dvCarried = readManifestRawLines(fs, r, head).filter(l =>
       l.startsWith("#dv:") || l.startsWith("#eqdel:"))
-    try {
-      val next = head + 1
-      Option(cowPublishFault.remove(r.toString)).foreach(_.run())
-      publishManifest(fs, r, next,
-        Seq(s"#stats:$statsName", schemaLine) ++ dvCarried ++ meta ++ carryLines ++ newFiles)
-      next
-    } catch {
-      case e: SnapshotConflictException =>
-        fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), statsName), false)
-        // content-preserving rewrites (partitioned compaction) get the
-        // RewriteFiles re-validation unconditionally; the CoW VERBS get
-        // it iff they can prove the racer's new files are outside their
-        // key/predicate scope — the output of a verb is not content-
-        // preserving, so an UNPROVEN race keeps the strict abort+replan
-        // contract (landing it blind would correspond to no serial
-        // order the caller certified).
+    commitAt(fs, r, head + 1,
+      Seq(s"#stats:$statsName", schemaLine) ++ dvCarried ++ meta ++ carryLines ++ newFiles,
+      attemptFiles = Seq(new org.apache.hadoop.fs.Path(manifestDir(r), statsName)),
+      ownedFiles = batch +: ownedFiles,
+      // content-preserving rewrites (partitioned compaction) get the
+      // RewriteFiles re-validation unconditionally; the CoW VERBS get
+      // it iff they can prove the racer's new files are outside their
+      // key/predicate scope — the output of a verb is not content-
+      // preserving, so an UNPROVEN race keeps the strict abort+replan
+      // contract (landing it blind would correspond to no serial
+      // order the caller certified).
+      revalidate = Some { e =>
         val verbScope: Option[org.apache.spark.sql.catalyst.expressions.Expression] =
           if (rewriteOf.isDefined) None
           else scopePred.flatMap(f => f())
             .map(org.apache.spark.sql.GraftColumnBridge.expression)
-        if (rewriteOf.isDefined || verbScope.isDefined) {
-          try return republishPinnedRewrite(spark, fs, r, head,
-            rewriteOf.getOrElse(consumed), newFiles, newStats, schemaLine, meta,
-            carriesLines = true, e, scopeDisjoint = verbScope)
-          catch {
-            case e2: SnapshotConflictException =>
-              fs.delete(batch, true)
-              throw e2
-          }
-        }
-        fs.delete(batch, true)
-        throw e
-    }
+        if (rewriteOf.isEmpty && verbScope.isEmpty) throw e
+        republishPinnedRewrite(spark, fs, r, head,
+          rewriteOf.getOrElse(consumed), newFiles, newStats, schemaLine, meta,
+          carriesLines = true, RevalidateRetries, scopeDisjoint = verbScope)(e)
+      })
   }
-
-  /** TEST-ONLY fault point: a one-shot action run immediately before a
-    * CoW publish claims its manifest for the given table ROOT — specs
-    * and the deterministic driver race query inject a racing commit
-    * here to exercise the conflict paths without timing luck. Keyed by
-    * root (never fires on another table) and consumed on first use;
-    * empty in production. */
-  private[graft] val cowPublishFault =
-    new java.util.concurrent.ConcurrentHashMap[String, Runnable]()
 
   /** COPY-ON-WRITE row-level UPDATE — `UPDATE t SET c = e, … WHERE
     * pred`, the third CoW verb beside [[mergeSnapshot]] and
@@ -3693,18 +3624,8 @@ object GraftCatalog {
       pred: Column, set: Seq[(String, Column)],
       meta: Seq[String] = Seq.empty): Long = {
     val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
-    val stats = readStats(spark, root, head)
-    val consult = statsLogical(stats, cs)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-    val ptSpec = readPartitionSpecsAt(fs, r)
-    val ptSchema = if (ptSpec.isEmpty) None else cs
-    val candidates = files.filter(f =>
-      consult.get(f).forall(st => mayContain(st, predExpr, tz)) &&
-        tupleMayMatch(ptSpec, ptSchema, f, predExpr, tz))
+    val PredScope(head, files, cs, stats, candidates) =
+      predScope(spark, fs, r, root, pred)
     val matchedFiles = pinFilesWhere(spark, candidates, pred, cs)
     if (matchedFiles.isEmpty) return head
     val carried = files.filterNot(matchedFiles)
@@ -3754,18 +3675,8 @@ object GraftCatalog {
       "replaceWhere: every incoming row must satisfy the overwrite predicate")
     validateChecks(spark, root, rows)
     val (fs, r) = fsOf(spark, root)
-    val head = snapshotVersions(spark, root).last
-    val files = readManifest(fs, r, head)
-    val cs = readSchemaLine(fs, r, head)
-    val stats = readStats(spark, root, head)
-    val consult = statsLogical(stats, cs)
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val predExpr = org.apache.spark.sql.GraftColumnBridge.expression(pred)
-    val ptSpec = readPartitionSpecsAt(fs, r)
-    val ptSchema = if (ptSpec.isEmpty) None else cs
-    val candidates = files.filter(f =>
-      consult.get(f).forall(st => mayContain(st, predExpr, tz)) &&
-        tupleMayMatch(ptSpec, ptSchema, f, predExpr, tz))
+    val PredScope(head, files, cs, stats, candidates) =
+      predScope(spark, fs, r, root, pred)
     val matchedFiles = pinFilesWhere(spark, candidates, pred, cs)
     if (matchedFiles.isEmpty && rows.isEmpty) return head
     val carried = files.filterNot(matchedFiles)
@@ -3780,6 +3691,87 @@ object GraftCatalog {
     commitCow(spark, fs, r, head, carried,
       stats.filter { case (p, _) => carried.contains(p) }, newData, meta,
       scopePred = Some(() => Some(pred)))
+  }
+
+  // ---------------------------------------------------------------------
+  // THE COMMIT CORE. A commit is one create-exclusive claim of
+  // `v<N>.manifest`: two racing writers can never both publish a
+  // version, and a writer that loses leaves no trace. Every snapshot
+  // verb claims through [[commitAt]] and retries through [[retrying]],
+  // so the claim, its undo, the re-validation hook and the attempt loop
+  // are written once.
+  // ---------------------------------------------------------------------
+
+  /** TEST-ONLY fault point: a one-shot action run immediately before the
+    * next manifest claim on the given table ROOT — specs and the
+    * deterministic race query q156 inject a racing commit here to
+    * exercise the conflict paths without timing luck. Keyed by root
+    * (never fires on another table) and consumed on first use; empty in
+    * production. */
+  private[graft] val publishFault =
+    new java.util.concurrent.ConcurrentHashMap[String, Runnable]()
+
+  /** Re-publish attempts [[republishPinnedRewrite]] makes after its
+    * first, each re-validated against the newer head. */
+  private val RevalidateRetries = 19
+
+  /** Claim version `next` with `lines` and return it. On a lost claim,
+    * `attemptFiles` (this claim's stats sidecar and delete-sidecar
+    * copies) and the segments the claim sealed are deleted at once;
+    * then `revalidate` — [[republishPinnedRewrite]], partly applied —
+    * gets its chance to land the already-written work on the new head.
+    * Only when there is none, or it fails too, are `ownedFiles` (batch
+    * directory, DV/eqdel sidecars, a transaction's fork) deleted and
+    * the conflict rethrown. */
+  private def commitAt(fs: org.apache.hadoop.fs.FileSystem,
+      r: org.apache.hadoop.fs.Path, next: Long, lines: Seq[String],
+      attemptFiles: Seq[org.apache.hadoop.fs.Path] = Seq.empty,
+      ownedFiles: Seq[org.apache.hadoop.fs.Path] = Seq.empty,
+      revalidate: Option[SnapshotConflictException => Long] = None): Long = {
+    Option(publishFault.remove(r.toString)).foreach(_.run())
+    val (claimed, sealedSegments) = publishManifest(fs, r, next, lines)
+    if (claimed) next
+    else {
+      (attemptFiles ++ sealedSegments).foreach(fs.delete(_, true))
+      resolveConflict(fs, new SnapshotConflictException(
+        s"snapshot commit conflict: version $next already published under $r"),
+        ownedFiles, revalidate)
+    }
+  }
+
+  /** The conflict tail of [[commitAt]], shared with a fast-forward
+    * whose base already moved ([[publishBranchFF]]): `revalidate`, else
+    * delete `ownedFiles` and rethrow. */
+  private def resolveConflict(fs: org.apache.hadoop.fs.FileSystem,
+      e: SnapshotConflictException,
+      ownedFiles: Seq[org.apache.hadoop.fs.Path],
+      revalidate: Option[SnapshotConflictException => Long]): Long =
+    try revalidate.fold[Long](throw e)(_(e))
+    catch {
+      case e2: SnapshotConflictException =>
+        ownedFiles.foreach(fs.delete(_, true))
+        throw e2
+    }
+
+  /** The one attempt loop: `attempt(n)` for n = 0, 1, …, re-run on a
+    * [[SnapshotConflictException]] at most `maxRetries` times after the
+    * first, then the conflict propagates. Jittered linear backoff
+    * between attempts: an immediate retry puts N racing writers
+    * straight back into the same claim window — under real contention
+    * (many streaming sinks on one table) that is quadratic wasted work.
+    * Capped so a lone retry never stalls a commit. */
+  private def retrying[T](maxRetries: Int)(attempt: Int => T): T = {
+    var n = 0
+    while (true) {
+      try return attempt(n)
+      catch {
+        case _: SnapshotConflictException if n < maxRetries =>
+          n += 1
+          Thread.sleep(math.min(200L, n * 20L) +
+            scala.util.Random.nextInt(20).toLong)
+      }
+    }
+    throw new IllegalStateException("unreachable")
   }
 
   /** The commit point: an ATOMIC CREATE-EXCLUSIVE claim of the FINAL
@@ -3804,17 +3796,17 @@ object GraftCatalog {
     * writer dies after claiming but mid-content-write, which the
     * `#eof` terminator turns into a DETECTED failure (strict readers
     * refuse the version; [[vacuumSnapshots]] reaps it) instead of a
-    * silently short file list. */
+    * silently short file list. Returns (claimed, the segments sealed
+    * for this claim); only [[commitAt]] calls it. */
   private def publishManifest(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, v: Long, files: Seq[String]): Unit = {
+      root: org.apache.hadoop.fs.Path, v: Long,
+      files: Seq[String]): (Boolean, Seq[org.apache.hadoop.fs.Path]) = {
     val md = manifestDir(root)
     fs.mkdirs(md)
     val fin = new org.apache.hadoop.fs.Path(md, s"v$v.manifest")
-    if (!claimExclusive(fs, fin,
-        ((segmentLines(fs, root, files) :+ "#eof").mkString("\n") + "\n")
-          .getBytes("UTF-8")))
-      throw new SnapshotConflictException(
-        s"snapshot commit conflict: version $v already published under $root")
+    val (lines, sealedSegments) = segmentLines(fs, root, files)
+    (claimExclusive(fs, fin,
+      ((lines :+ "#eof").mkString("\n") + "\n").getBytes("UTF-8")), sealedSegments)
   }
 
   /** Publish-time segmentation (see the segment notes above
@@ -3824,16 +3816,19 @@ object GraftCatalog {
     * preserved exactly, so resolution reproduces the caller's list
     * byte-for-byte. When the carried include chain exceeds
     * `manifestMaxIncludes`, the whole data section is resolved once
-    * and resealed as a single segment (amortized O(1) per file). */
+    * and resealed as a single segment (amortized O(1) per file).
+    * Returns the lines and the segment files sealed. */
   private def segmentLines(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, lines0: Seq[String]): Seq[String] = {
+      root: org.apache.hadoop.fs.Path,
+      lines0: Seq[String]): (Seq[String], Seq[org.apache.hadoop.fs.Path]) = {
     val (inlineMax, includesMax, _) = manifestConfAt(fs, root)
     val lines =
       if (lines0.count(_.startsWith("#include:")) <= includesMax) lines0
       else resolveIncludes(fs, root, lines0, strict = true)
     if (!lines.exists(_.startsWith("#include:")) &&
-        lines.count(!_.startsWith("#")) <= inlineMax) return lines
+        lines.count(!_.startsWith("#")) <= inlineMax) return (lines, Seq.empty)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    val sealedSegments = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
     val run = scala.collection.mutable.ArrayBuffer.empty[String]
     def seal(): Unit = {
       if (run.length > inlineMax) {
@@ -3844,6 +3839,7 @@ object GraftCatalog {
           ((run :+ "#eof").mkString("\n") + "\n").getBytes("UTF-8"))
         finally outStream.close()
         out += s"#include:$name"
+        sealedSegments += p
       } else out ++= run
       run.clear()
     }
@@ -3851,7 +3847,7 @@ object GraftCatalog {
       if (l.startsWith("#")) { seal(); out += l } else run += l
     }
     seal()
-    out.toSeq
+    (out.toSeq, sealedSegments.toSeq)
   }
 
   /** Claim `fin` with a genuinely ATOMIC exclusive create and write
@@ -4456,15 +4452,9 @@ object GraftCatalog {
     val keptMeta = readManifestRawLines(fs, r, head).filter(l =>
       l.startsWith("#schema:") || l.startsWith("#dv:") ||
         l.startsWith("#eqdel:"))
-    val next = head + 1
-    try publishManifest(fs, r, next,
-      Seq(s"#stats:$flatStats", "#rewrite:manifests") ++ keptMeta ++ files)
-    catch {
-      case e: SnapshotConflictException =>
-        fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), flatStats), false)
-        throw e
-    }
-    next
+    commitAt(fs, r, head + 1,
+      Seq(s"#stats:$flatStats", "#rewrite:manifests") ++ keptMeta ++ files,
+      attemptFiles = Seq(new org.apache.hadoop.fs.Path(manifestDir(r), flatStats)))
   }
 
   /** ANALYZE as a METADATA-plus-batch-scan commit: re-run the full
@@ -4500,15 +4490,9 @@ object GraftCatalog {
     val keptMeta = readManifestRawLines(fs, r, head).filter(l =>
       l.startsWith("#schema:") || l.startsWith("#dv:") ||
         l.startsWith("#eqdel:"))
-    val next = head + 1
-    try publishManifest(fs, r, next,
-      Seq(s"#stats:$statsName", "#analyze:stats") ++ keptMeta ++ files)
-    catch {
-      case e: SnapshotConflictException =>
-        fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), statsName), false)
-        throw e
-    }
-    next
+    commitAt(fs, r, head + 1,
+      Seq(s"#stats:$statsName", "#analyze:stats") ++ keptMeta ++ files,
+      attemptFiles = Seq(new org.apache.hadoop.fs.Path(manifestDir(r), statsName)))
   }
 
   def rollbackSnapshot(spark: SparkSession, root: String, to: Long): Long = {
@@ -4521,8 +4505,7 @@ object GraftCatalog {
     val carriedMeta = readManifestLines(fs, r, to)
       .filter(l => l.startsWith("#stats:") || l.startsWith("#schema:") ||
         l.startsWith("#dv:") || l.startsWith("#eqdel:"))
-    publishManifest(fs, r, next, carriedMeta ++ carriedDataRaw(fs, r, to))
-    next
+    commitAt(fs, r, next, carriedMeta ++ carriedDataRaw(fs, r, to))
   }
 
   /** ADD/DROP-COLUMN schema evolution as a PURE-METADATA commit
@@ -4732,10 +4715,8 @@ object GraftCatalog {
     val carried = readManifestLines(fs, r, head).filter(l =>
       l.startsWith("#stats:") || l.startsWith("#dv:") ||
         l.startsWith("#eqdel:"))
-    val next = head + 1
-    publishManifest(fs, r, next,
+    commitAt(fs, r, head + 1,
       carried ++ Seq(schemaLineOf(evolved)) ++ carriedDataRaw(fs, r, head))
-    next
   }
 
   /** ADD a NESTED struct subfield as a PURE-METADATA commit (Iceberg's
@@ -5035,21 +5016,12 @@ object GraftCatalog {
     // expectedHead). A lost race revalidates (republishPinnedRewrite):
     // a disjoint racer re-publishes the z-clustered batch against the
     // new head; only a genuine overlap aborts for the replan path.
-    val next = v + 1
-    try publishManifest(fs, r, next, Seq(s"#stats:$statsName", schemaLine) ++ newFiles)
-    catch {
-      case e: SnapshotConflictException =>
-        fs.delete(new org.apache.hadoop.fs.Path(manifestDir(r), statsName), false)
-        try return republishPinnedRewrite(spark, fs, r, v, files.toSet,
-          newFiles, newStats, schemaLine, Seq.empty,
-          carriesLines = false, e)
-        catch {
-          case e2: SnapshotConflictException =>
-            fs.delete(batch, true)
-            throw e2
-        }
-    }
-    next
+    commitAt(fs, r, v + 1, Seq(s"#stats:$statsName", schemaLine) ++ newFiles,
+      attemptFiles = Seq(new org.apache.hadoop.fs.Path(manifestDir(r), statsName)),
+      ownedFiles = Seq(batch),
+      revalidate = Some(republishPinnedRewrite(spark, fs, r, v, files.toSet,
+        newFiles, newStats, schemaLine, Seq.empty, carriesLines = false,
+        RevalidateRetries)(_)))
   }
 
   /** DESTRUCTIVE: delete data files referenced only by versions older
@@ -6380,8 +6352,10 @@ object GraftCatalog {
       stats.values.toSeq.sortBy(_.path))
     val schemaLine = readSchemaLine(sfs, sr, v).map(s => schemaLineOf(s)).toSeq
     val dvLines = copyDvSidecars(sfs, sr, v, dfs, dr)
-    publishManifest(dfs, dr, 1L,
-      Seq(s"#stats:$statsName") ++ schemaLine ++ dvLines ++ files)
+    commitAt(dfs, dr, 1L,
+      Seq(s"#stats:$statsName") ++ schemaLine ++ dvLines ++ files,
+      attemptFiles = new org.apache.hadoop.fs.Path(manifestDir(dr), statsName) +:
+        deleteLinePaths(dr, dvLines))
     // The clone inherits the source's TABLE CONFIGURATION — CHECK
     // constraints, partition spec, bloom enrollment, sort order — or a
     // clone of a governed table would silently write unvalidated,
@@ -6470,14 +6444,22 @@ object GraftCatalog {
   /** The fast-forward PUBLISH half of [[mergeSnapshotBranch]] — split
     * (r17) so the cross-table transaction can flip N tables pending
     * and confirm them with one marker create before any branch
-    * cleanup runs. */
+    * cleanup runs. A parent that moved past the fork point conflicts
+    * like a lost claim: `revalidate`, else `ownedFiles` are deleted
+    * ([[commitAt]]). Every file the flip references besides the
+    * branch's data — stats sidecar, delete copies, segments — is
+    * written for this flip alone ([[branchFFFiles]]). */
   private def publishBranchFF(spark: SparkSession, root: String,
-      name: String, meta: Seq[String]): Long = {
+      name: String, meta: Seq[String],
+      ownedFiles: Seq[org.apache.hadoop.fs.Path] = Seq.empty,
+      revalidate: Option[SnapshotConflictException => Long] = None): Long = {
     val base = resolveSnapshotTag(spark, root, branchBaseTag(name))
     val head = snapshotVersions(spark, root).last
-    if (head != base) throw new SnapshotConflictException(
-      s"branch $name forked at v$base but $root is at v$head — " +
-        "fast-forward would discard parent commits; rebase the branch")
+    if (head != base) return resolveConflict(fsOf(spark, root)._1,
+      new SnapshotConflictException(
+        s"branch $name forked at v$base but $root is at v$head — " +
+          "fast-forward would discard parent commits; rebase the branch"),
+      ownedFiles, revalidate)
     val br = snapshotBranchRoot(root, name)
     val (bfs, br2) = fsOf(spark, br)
     val bHead = snapshotVersions(spark, br).last
@@ -6487,10 +6469,26 @@ object GraftCatalog {
     val statsName = writeStatsFile(spark, fs, r, stats.values.toSeq.sortBy(_.path))
     val schemaLine = readSchemaLine(bfs, br2, bHead).map(s => schemaLineOf(s)).toSeq
     val dvLines = copyDvSidecars(bfs, br2, bHead, fs, r)
-    publishManifest(fs, r, head + 1,
+    commitAt(fs, r, head + 1,
       Seq(s"#stats:$statsName", s"#branch-merge:$name") ++ meta ++
-        schemaLine ++ dvLines ++ files)
-    head + 1
+        schemaLine ++ dvLines ++ files,
+      attemptFiles = new org.apache.hadoop.fs.Path(manifestDir(r), statsName) +:
+        deleteLinePaths(r, dvLines),
+      ownedFiles, revalidate)
+  }
+
+  /** The files a fast-forward flip at `v` wrote for itself: its stats
+    * sidecar, sealed segments and delete-sidecar copies — what undoing
+    * an unconfirmed pending flip deletes beside its manifest. */
+  private def branchFFFiles(fs: org.apache.hadoop.fs.FileSystem,
+      r: org.apache.hadoop.fs.Path, v: Long): Seq[org.apache.hadoop.fs.Path] = {
+    val raw = readManifestRawLines(fs, r, v, strict = false)
+    raw.collect {
+      case l if l.startsWith("#stats:") =>
+        new org.apache.hadoop.fs.Path(manifestDir(r), l.stripPrefix("#stats:"))
+      case l if l.startsWith("#include:") =>
+        new org.apache.hadoop.fs.Path(manifestDir(r), l.stripPrefix("#include:"))
+    } ++ deleteLinePaths(r, raw)
   }
 
   /** Drop a merged branch's pin tag, manifests and refs. Its data
@@ -6669,7 +6667,8 @@ object GraftCatalog {
     * trace; `maxRetries > 0` re-runs `body` on a fresh fork of the new
     * head (body must therefore be a pure function of its branch — the
     * same replan contract the verbs document). A `body` exception
-    * aborts and rethrows, root untouched. Returns the committed
+    * aborts and rethrows, root untouched (a conflict the body raises
+    * counts as a lost race under `maxRetries`). Returns the committed
     * version.
     *
     * `scope` opts the transaction into the VERB-grade serializable
@@ -6694,9 +6693,8 @@ object GraftCatalog {
   def transactSnapshot(spark: SparkSession, root: String,
       maxRetries: Int = 0, scope: Option[Column] = None,
       meta: Seq[String] = Seq.empty)(
-      body: String => Unit): Long = {
-    var attempt = 0
-    while (true) {
+      body: String => Unit): Long =
+    retrying(maxRetries) { _ =>
       val name = s"tx${writerToken()}"
       val br = createSnapshotBranch(spark, root, name)
       try body(br)
@@ -6705,20 +6703,18 @@ object GraftCatalog {
           dropSnapshotBranch(spark, root, name)
           throw e
       }
-      try return mergeSnapshotBranch(spark, root, name, meta)
-      catch {
-        case e: SnapshotConflictException =>
-          scope.foreach { pred =>
-            try return commitBranchRevalidated(spark, root, name, pred, e, meta)
-            catch { case _: SnapshotConflictException => /* fall through */ }
-          }
-          dropSnapshotBranch(spark, root, name)
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
+      // a lost flip re-validates under `scope`, else the fork — its pin
+      // tag and branch root, as [[dropSnapshotBranch]] — is dropped
+      val v = publishBranchFF(spark, root, name, meta,
+        ownedFiles = Seq(
+          new org.apache.hadoop.fs.Path(refsDir(new org.apache.hadoop.fs.Path(root)),
+            s"${branchBaseTag(name)}.tag"),
+          new org.apache.hadoop.fs.Path(snapshotBranchRoot(root, name))),
+        revalidate = scope.map(pred =>
+          commitBranchRevalidated(spark, root, name, pred, meta)(_)))
+      branchCleanup(spark, root, name)
+      v
     }
-    -1L // unreachable
-  }
 
   /** CROSS-TABLE TRANSACTION (r17 stretch) — N verbs over N tables as
     * ONE atomically reader-visible event (the catalog-level commit a
@@ -6745,7 +6741,8 @@ object GraftCatalog {
     *     referenced by the parents).
     *
     * Any lost publish race deletes the already-published pending
-    * manifests (invisible, so the undo is unobservable), drops every
+    * manifests and the files they wrote for themselves (invisible, so
+    * the undo is unobservable), drops every
     * fork, and — under `maxRetries` — re-runs `body` on fresh forks
     * of the new heads; otherwise the [[SnapshotConflictException]]
     * propagates with all N tables untouched. A COORDINATOR CRASH
@@ -6768,8 +6765,7 @@ object GraftCatalog {
     require(fsUris.size == 1,
       s"cross-table transaction roots must share one FileSystem, got $fsUris")
     val sorted = roots.sorted
-    var attempt = 0
-    while (true) {
+    retrying(maxRetries) { _ =>
       val txid = writerToken()
       val name = s"mtx$txid"
       // a fork failure on root k must not leak branches 1..k-1
@@ -6899,7 +6895,7 @@ object GraftCatalog {
           scala.util.Try(branchCleanup(spark, rt, name)).failed.foreach(t =>
             System.err.println(s"[graft] post-commit branch cleanup of " +
               s"$rt#$name failed (tx $txid committed; clean up manually): $t")))
-        return published.toMap
+        published.toMap
       } catch {
         case e: Throwable if !confirmed =>
           // undo is unobservable: the pending manifests were invisible.
@@ -6914,24 +6910,22 @@ object GraftCatalog {
           // are invisible and vacuum-reapable anyway — one filesystem
           // failure here must not skip the remaining deletes or the
           // branch-drop loop below, leaking fork branches whose base
-          // tags pin vacuum retention until manual cleanup
+          // tags pin vacuum retention until manual cleanup. The files
+          // each flip wrote for itself go right after its manifest.
           published.foreach { case (rt, v) =>
             scala.util.Try {
               val (fs2, r2) = fsOf(spark, rt)
+              val own = scala.util.Try(branchFFFiles(fs2, r2, v)).getOrElse(Seq.empty)
               fs2.delete(new org.apache.hadoop.fs.Path(
                 manifestDir(r2), s"v$v.manifest"), false)
+              own.foreach(fs2.delete(_, true))
             }
           }
           sorted.foreach(rt =>
             scala.util.Try(dropSnapshotBranch(spark, rt, name)))
-          e match {
-            case _: SnapshotConflictException if attempt < maxRetries =>
-              attempt += 1
-            case _ => throw e
-          }
+          throw e
       }
     }
-    Map.empty // unreachable
   }
 
   /** TEST-ONLY one-shot fault point for the cross-table transaction:
@@ -6965,9 +6959,8 @@ object GraftCatalog {
     * lines from its fork copy (folded MoR content mid-tx) has no safe
     * graft — strict abort stands. */
   private def commitBranchRevalidated(spark: SparkSession, root: String,
-      name: String, scope: Column,
-      original: SnapshotConflictException,
-      meta: Seq[String] = Seq.empty): Long = {
+      name: String, scope: Column, meta: Seq[String])(
+      original: SnapshotConflictException): Long = {
     val base = resolveSnapshotTag(spark, root, branchBaseTag(name))
     val br = snapshotBranchRoot(root, name)
     val (bfs, br2) = fsOf(spark, br)
@@ -6996,29 +6989,17 @@ object GraftCatalog {
       if (dvAdded.isEmpty) Set.empty[String]
       else deleteLineTargets(spark, br2, dvAdded)
         .intersect(bFiles.toSet) -- newFiles.toSet
-    val migrated = migrateDeleteLines(bfs, br2, dvAdded, fs, r)
-    def dropMigrated(): Unit = migrated.foreach { l =>
-      val n = if (l.startsWith("#dv:")) l.stripPrefix("#dv:")
-        else parseEqDel(l.stripPrefix("#eqdel:"))._1
-      fs.delete(new org.apache.hadoop.fs.Path(deletesDir(r), n), true)
-    }
-    val v =
-      try republishPinnedRewrite(spark, fs, r, base, consumed, newFiles,
-        newStats, schemaLine, meta = Seq(s"#txn-merge:$name") ++ meta,
-        carriesLines = true, original,
-        scopeDisjoint =
-          Some(org.apache.spark.sql.GraftColumnBridge.expression(scope)),
-        mustStayLive = liveTargets, extraDvLines = migrated,
-        racerDeletesOutOfScope = true)
-      catch { case e: Throwable => dropMigrated(); throw e }
-    // same cleanup contract as the fast-forward: the branch's data
-    // batches are now REFERENCED by the parent's new version — drop
-    // only its manifest line, refs, and fork pin (a later parent
-    // compaction migrates the data into root/data).
-    deleteSnapshotTag(spark, root, branchBaseTag(name))
-    fs.delete(manifestDir(br2), true)
-    fs.delete(refsDir(br2), true)
-    v
+    // The branch's data batches become REFERENCED by the parent's new
+    // version; the caller drops only the fork's manifests, refs and
+    // pin, as after a fast-forward.
+    republishPinnedRewrite(spark, fs, r, base, consumed, newFiles,
+      newStats, schemaLine, meta = Seq(s"#txn-merge:$name") ++ meta,
+      carriesLines = true, RevalidateRetries,
+      scopeDisjoint =
+        Some(org.apache.spark.sql.GraftColumnBridge.expression(scope)),
+      mustStayLive = liveTargets,
+      graftLines = () => migrateDeleteLines(bfs, br2, dvAdded, fs, r),
+      racerDeletesOutOfScope = true)(original)
   }
 
   /** The compaction two-rename swap (see [[compactParquet]]'s scope

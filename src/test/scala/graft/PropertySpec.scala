@@ -637,7 +637,7 @@ class PropertySpec extends AnyFunSuite {
       val hi = lo + 50 + rnd.nextInt(150)
       val ins = 50000L + seed * 1000L
       // racer: an append strictly ABOVE the merge's key envelope
-      cat.cowPublishFault.put(root, new Runnable {
+      cat.publishFault.put(root, new Runnable {
         def run(): Unit = {
           cat.commitSnapshot(
             spark.range(ins + 500, ins + 600)

@@ -2742,7 +2742,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
     // the racer fires BETWEEN the merge's read/pin and its publish:
     // a disjoint append (keys 5000+, far outside the merge's [10,20]
     // key envelope)
-    GraftCatalog.cowPublishFault.put(root, new Runnable {
+    GraftCatalog.publishFault.put(root, new Runnable {
       def run(): Unit = GraftCatalog.commitSnapshot(
         Seq((5000L, 1L), (5001L, 2L)).toDF("k", "v"), root, append = true)
     })
@@ -2773,7 +2773,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
     // racer appends k=15 — INSIDE the merge's key envelope: the merge
     // would have treated it as MATCHED on the racer's head, so no
     // serial order matches the already-written batch → abort + replan
-    GraftCatalog.cowPublishFault.put(root, new Runnable {
+    GraftCatalog.publishFault.put(root, new Runnable {
       def run(): Unit = GraftCatalog.commitSnapshot(
         Seq((15L, 999L)).toDF("k", "v"), root, append = true)
     })
@@ -2799,7 +2799,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
         .repartitionByRange(2, col("k")),
       root, append = false)
     val v1 = GraftCatalog.snapshotVersions(spark, root).last
-    GraftCatalog.cowPublishFault.put(root, new Runnable {
+    GraftCatalog.publishFault.put(root, new Runnable {
       def run(): Unit = GraftCatalog.commitSnapshot(
         Seq((7000L, 1L)).toDF("k", "v"), root, append = true)
     })
@@ -2808,7 +2808,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
     val head1 = GraftCatalog.readSnapshot(spark, root)
     assert(head1.count() == 91 && head1.where(col("k") === 7000L).count() == 1)
     // UPDATE racing a disjoint append re-publishes too
-    GraftCatalog.cowPublishFault.put(root, new Runnable {
+    GraftCatalog.publishFault.put(root, new Runnable {
       def run(): Unit = GraftCatalog.commitSnapshot(
         Seq((8000L, 1L)).toDF("k", "v"), root, append = true)
     })
@@ -2818,7 +2818,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
     assert(GraftCatalog.readSnapshot(spark, root)
       .where(col("v") === -1L).count() == 11)
     // but an update racing an IN-SCOPE append must abort
-    GraftCatalog.cowPublishFault.put(root, new Runnable {
+    GraftCatalog.publishFault.put(root, new Runnable {
       def run(): Unit = GraftCatalog.commitSnapshot(
         Seq((55L, 0L)).toDF("k", "v"), root, append = true)
     })
@@ -2837,7 +2837,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
         .repartitionByRange(2, col("k")),
       root, append = false)
     val v1 = GraftCatalog.snapshotVersions(spark, root).last
-    GraftCatalog.cowPublishFault.put(root, new Runnable {
+    GraftCatalog.publishFault.put(root, new Runnable {
       def run(): Unit = GraftCatalog.commitSnapshot(
         Seq((9000L, 1L)).toDF("k", "v"), root, append = true)
     })
@@ -2851,7 +2851,7 @@ class SourcesCatalogSpec extends AnyFunSuite {
     assert(head.where(col("k") === 10L).select("v").as[Long].head() == 111L)
     // a racer that lands a MoR DELETE over the verb's CONSUMED files
     // is a genuine overlap — strict abort survives
-    GraftCatalog.cowPublishFault.put(root, new Runnable {
+    GraftCatalog.publishFault.put(root, new Runnable {
       def run(): Unit =
         { GraftCatalog.deleteSnapshotWhereMor(spark, root, col("k") === 40L); () }
     })
