@@ -1,6 +1,6 @@
 package graft
 
-/** AMBIENT-NOISE CONTROLS shared by [[Bench]] and [[BenchFocus]]:
+/** AMBIENT-NOISE CONTROLS shared by [[Bench]] and `Probe reps`:
   * five pinned queries whose code and plan are intentionally frozen
   * across rounds, with their round-14 idle-host sf0.1 reference
   * medians. Their medians in any given run, against these references,
@@ -22,7 +22,7 @@ object BenchControls {
     * decimal sum — the r14/r18 references no longer describe the
     * current plans (a run would read ~0.7 ambient on an idle host
     * purely from the speedup). All three SF tables were re-measured on
-    * the final r18 tree via double-pass BenchFocus (each control run
+    * the final r18 tree via double-pass `Probe reps` (each control run
     * twice, the SECOND pass's 3-rep median taken, so one-time codegen
     * never inflates a reference), host load ~1.5–1.9 of 32 cores.
     * Labels carry `r18opt` so cross-round readers know which

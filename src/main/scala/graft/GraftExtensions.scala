@@ -36,9 +36,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // long limbs, recombined exactly per group) — the money-discipline
     // hot path across the relational + TPC-H surface; bit-identical by
     // construction, DecSumSpec + the 276-query oracle gate pin it.
-    // r18 optimization round; escape hatch
-    // spark.graft.optimizer.decimalSumLimbs=false.
-    e.injectOptimizerRule(session => graft.plans.DecimalSumLimbs(session))
+    e.injectOptimizerRule(_ => graft.plans.DecimalSumLimbs)
     e.injectFunction((FunctionIdentifier("simhash64"),
       info("simhash64", "simhash64(array<string>) - 64-bit SimHash of a token array"),
       es => SimHash64(es.head)))

@@ -62,15 +62,9 @@ object Tables {
     * integer/decimal anchors, not fold-order-sensitive double sums).
     * Hash-distributes on a deterministic key when one is given (cheap,
     * retry-safe); keyless round-robin otherwise (pays the
-    * sort-before-repartition tax, still deterministic).
-    * `spark.graft.spread.enabled=false` turns every call into the
-    * identity — the escape hatch that also powers same-session
-    * interleaved A/B measurement (SpreadAB). */
-  def spreadEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.spread.enabled").forall(_.toBoolean)
-
+    * sort-before-repartition tax, still deterministic). Returns `df`
+    * itself when the scan is already wide enough. */
   def spread(df: DataFrame, key: org.apache.spark.sql.Column*): DataFrame = {
-    if (!spreadEnabled(df.sparkSession)) return df
     val want = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= want) df
     else if (key.nonEmpty) df.repartition(want, key: _*)

@@ -13,61 +13,26 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object Cols {
 
-  /** The decimal's unscaled long (exact for precision ≤ 18, where the
-    * value is stored compact): the cheap exit from decimal space once
-    * the per-row HALF_UP rounding of the cast has fixed the value. */
-  private def unscaled(c: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      org.apache.spark.sql.catalyst.expressions.UnscaledValue(
-        org.apache.spark.sql.GraftColumnBridge.expression(c)))
-
-  /** Order-independent sum of a double column, bit-identical to
-    * `CAST(SUM(CAST(c AS DECIMAL(18,s))) AS DOUBLE)` (the oracle text).
-    *
-    * r18 (optimization): the decimal SUM buffer for a (18,s) input is
-    * DECIMAL(28,s) — non-compact, so every partial-aggregate update was
-    * a java.math.BigDecimal add (measured: a 5-sum moment aggregation
-    * over sf0.1 lineitem spends 1.5 s of 1.85 s in the decimal casts +
-    * adds; plain long sums run at 0.37 s). The cast (which pins the
-    * per-row HALF_UP decimal rounding both engines agree on) stays;
-    * the SUM leaves decimal space: the cast value's unscaled long is
-    * split into four base-2^16 limbs (arithmetic shift = floor
-    * division, so the signed top limb carries the sign and the
-    * identity u = (u>>48)·2^48 + Σ((u>>16i)&0xFFFF)·2^16i holds for
-    * negatives), each limb is summed as a plain codegen long, and the
-    * group's exact total is recombined in DECIMAL(38,0) — 3 rows per
-    * group, not per row — then divided by 10^s (result scale ≥ 6 ≥ s,
-    * so the division is exact) and cast to double. Same exact rational
-    * per group → same IEEE double, on ANY input the old form accepted.
-    * Overflow headroom: Σ of a 16-bit limb stays inside a long for
-    * ≤ 2^63/2^16 ≈ 1.4e14 rows — past 100 TB at any realistic row
-    * width — where the old DECIMAL(28,s) buffer overflowed to NULL at
-    * 10^(28-s) total, i.e. the limb form strictly dominates. */
+  /** Order-independent sum of a double column: the oracle text
+    * `CAST(SUM(CAST(c AS DECIMAL(18,s))) AS DOUBLE)` itself, so results
+    * are bit-identical to it by construction. The per-row cast pins the
+    * HALF_UP decimal rounding both engines agree on; the speed comes
+    * from the [[graft.plans.DecimalSumLimbs]] optimizer rule, which
+    * every [[graft.GraftSession]] installs: it sums the cast value's
+    * unscaled long as four plain long limbs instead of BigDecimal adds.
+    * The exact range is the rule's — the Sum result type
+    * DECIMAL(28,s), a 10^(28-s) total. */
   def dsum(c: Column, scale: Int = 2): Column =
-    dsumOf(c.cast(DecimalType(18, scale)), scale)
+    sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
 
-  /** The limb-summed exact total of an already-decimal column (≤ 18
-    * digits, scale s) surfaced as DOUBLE — see [[dsum]]. */
-  private def dsumOf(dec: Column, scale: Int): Column = {
-    val u = unscaled(dec)
-    def limb(i: Int): Column =
-      if (i == 3) shiftright(u, 48)
-      else shiftright(u, 16 * i).bitwiseAND(lit(65535L))
-    val d38 = DecimalType(38, 0)
-    val tot = ((sum(limb(3)).cast(d38) * 65536 + sum(limb(2))) * 65536 +
-      sum(limb(1))) * 65536 + sum(limb(0))
-    (tot / math.pow(10, scale).toLong.toInt).cast(DoubleType)
-  }
-
-  /** [[dsum]] for products of money columns: bit-identical to
-    * `CAST(SUM(CAST(expr AS DECIMAL(38,4))) AS DOUBLE)` whenever
-    * |expr| < 10^14 (the cast to (18,4) then rounds identically to the
-    * (38,4) cast — same setScale(4, HALF_UP) on the same double), which
-    * holds for every moment power sum in this suite: the largest input
-    * is l_extendedprice² < 10^11. The (38,4) SUM buffer the old form
-    * used was the worst decimal path (non-compact input AND buffer);
-    * this is the q50/q100/q115 hot loop. */
-  def dsum4(c: Column): Column = dsumOf(c.cast(DecimalType(18, 4)), 4)
+  /** [[dsum]] at scale 4, for products of money columns. Bit-identical
+    * to `CAST(SUM(CAST(expr AS DECIMAL(38,4))) AS DOUBLE)` whenever
+    * |expr| < 10^14 (the (18,4) cast then rounds exactly like the (38,4)
+    * one — same setScale(4, HALF_UP) on the same double); the largest
+    * moment input in this suite is l_extendedprice² < 10^11. Totals are
+    * exact below 10^24 — above the largest 100 TB moment sum (about
+    * 10^21 for Σ l_extendedprice² at SF 100 000). */
+  def dsum4(c: Column): Column = dsum(c, 4)
 
   /** Deterministic average = decimal-sum / count. */
   def davg(c: Column, scale: Int = 2): Column =

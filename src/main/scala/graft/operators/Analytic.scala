@@ -32,20 +32,19 @@ object Analytic {
   private def q50(s: SparkSession, d: String): DataFrame = {
     val x = col("l_quantity")
     val y = col("l_extendedprice")
-    // limb-summed exact decimal totals (Cols.dsum4) — bit-identical to
-    // SUM(CAST(… AS DECIMAL(38,4))) for these < 10^11 products, without
-    // the per-row BigDecimal adds (r18 opt; probe: 1.85 s → long-sum
-    // floor 0.37 s for this exact 5-sum shape at sf0.1)
-    def dsum38(c: org.apache.spark.sql.Column) = dsum4(c)
+    // exact decimal totals (Cols.dsum4) — bit-identical to
+    // SUM(CAST(… AS DECIMAL(38,4))) for these < 10^11 products; the
+    // DecimalSumLimbs rule sums them as long limbs (r18 opt: 1.85 s →
+    // 0.37 s for this exact 5-sum shape at sf0.1)
     t(s, d, "lineitem")
       .groupBy("l_returnflag")
       .agg(
         count(lit(1)).as("n"),
         dsum(x).as("sx"),
         dsum(y).as("sy"),
-        dsum38(x * x).as("sxx"),
-        dsum38(y * y).as("syy"),
-        dsum38(x * y).as("sxy"))
+        dsum4(x * x).as("sxx"),
+        dsum4(y * y).as("syy"),
+        dsum4(x * y).as("sxy"))
       .select(
         col("l_returnflag"),
         col("n"),
@@ -297,7 +296,7 @@ object Analytic {
   private def q100(s: SparkSession, d: String): DataFrame = {
     val x = col("l_quantity")
     val y = col("l_extendedprice")
-    // limb-summed exact decimal totals — see q50/Cols.dsum4 (r18 opt)
+    // exact decimal totals — see q50/Cols.dsum4 (r18 opt)
     val sxx = col("n") * col("sxx") - col("sx") * col("sx")
     val syy = col("n") * col("syy") - col("sy") * col("sy")
     val sxy = col("n") * col("sxy") - col("sx") * col("sy")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Cols
 
 /** Round-8 continuation relational surface: multi-distinct aggregation
   * and the bin-blocked non-equi interval-overlap join.
@@ -187,23 +188,22 @@ object Analytic5 {
     * pairs guard to NULL (never NaN — engines disagree on rounding
     * NaN). Long-format output, deterministically ordered. */
   private def q115(s: SparkSession, d: String): DataFrame = {
-    // limb-summed exact decimal totals (graft.functions.Cols) — bit-
-    // identical to the old SUM(CAST(… AS DECIMAL(18,2)/(38,4))) forms
-    // on these < 10^11 measures, without 14 per-row BigDecimal adds
+    // exact decimal totals (graft.functions.Cols) — bit-identical to
+    // the SUM(CAST(… AS DECIMAL(18,2)/(38,4))) oracle forms on these
+    // < 10^11 measures; the DecimalSumLimbs rule sums them as long
+    // limbs instead of 14 per-row BigDecimal adds
     // (r18 opt: this was the single most expensive relational query,
     // 5.35 s at sf0.1, ~70% of it decimal-aggregation machinery)
     val vars = Seq(
       "disc" -> col("l_discount"), "price" -> col("l_extendedprice"),
       "qty" -> col("l_quantity"), "tax" -> col("l_tax"))
-    def dsum(c: org.apache.spark.sql.Column) = graft.functions.Cols.dsum(c)
-    def dsum38(c: org.apache.spark.sql.Column) = graft.functions.Cols.dsum4(c)
     val pairs = for {
       i <- vars.indices; j <- vars.indices if i < j
     } yield (vars(i), vars(j))
     val aggs =
-      vars.map { case (nm, c) => dsum(c).as(s"s_$nm") } ++
-        vars.map { case (nm, c) => dsum38(c * c).as(s"ss_$nm") } ++
-        pairs.map { case ((na, ca), (nb, cb)) => dsum38(ca * cb).as(s"sp_${na}_$nb") }
+      vars.map { case (nm, c) => Cols.dsum(c).as(s"s_$nm") } ++
+        vars.map { case (nm, c) => Cols.dsum4(c * c).as(s"ss_$nm") } ++
+        pairs.map { case ((na, ca), (nb, cb)) => Cols.dsum4(ca * cb).as(s"sp_${na}_$nb") }
     val n = col("n")
     def corrOf(a: String, b: String) = {
       val va = n * col(s"ss_$a") - col(s"s_$a") * col(s"s_$a")

@@ -1007,7 +1007,7 @@ object Dedup {
     // its wall on per-round driver work — 10 rounds × (Catalyst
     // planning + a broadcast build + a localCheckpoint job) — while
     // each round's compute on the banded candidate graph was
-    // milliseconds (JobTrace: ~50 jobs, job time ≪ wall). This is the
+    // milliseconds (`Probe jobs`: ~50 jobs, job time ≪ wall). This is the
     // Pregel superstep shape instead: ONE hash partitioner owns the
     // loop — the (edge, degree) adjacency is partitioned by source
     // once and the rank vector stays co-partitioned by node id, so the
@@ -1453,7 +1453,7 @@ object Dedup {
     // compute-once MEMORY_AND_DISK band-rows frame materializes every
     // minhash signature array (guide §5 — recompute beat the persist
     // pressure). Both variants measured SLOWER at sf0.1 over paired
-    // alternating BenchOne runs; evidence in OPTIMIZATION_r18.md.
+    // alternating `Probe reps` runs; evidence in OPTIMIZATION_r18.md.
     val base = all.where(col("doc_id") % 5 =!= 0)
     val delta = all.where(col("doc_id") % 5 === 0)
     bandRows(base).withColumn("is_delta", lit(0))

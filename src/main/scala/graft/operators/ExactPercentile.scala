@@ -372,21 +372,18 @@ object ExactPercentile {
     // gives the scan fewer tasks than cores (the driver testdata's
     // single-row-group files scan as ONE task), the projection casts
     // ran serially on one core and every refinement level re-ran them.
-    // ONLY in that case: hash-spread the RAW columns first (no
-    // round-robin pre-sort; the cast work then runs above the exchange
-    // at full parallelism) and keep the projected rows so each
+    // ONLY in that case: hash-spread the RAW columns first
+    // (Tables.spread on the three columns — no round-robin pre-sort;
+    // the cast work then runs above the exchange at full
+    // parallelism) and keep the projected rows so each
     // refinement level reads the materialized projection. The gate is
     // the runtime scan layout: at production scale the scan has ≥
     // cores splits and this is the identity — the design pin ("data
     // rows are never shuffled or cached") still holds where it
     // matters. Exact Long weight sums and min/max are
     // order-independent, so results are unchanged.
-    val want = spark.sparkContext.defaultParallelism
-    val narrowScan = graft.Tables.spreadEnabled(spark) &&
-      df.rdd.getNumPartitions < want
-    val pre = if (narrowScan)
-      df.repartition(want, col(cols(0)), col(cols(1)), col(cols(2)))
-    else df
+    val pre = graft.Tables.spread(df, col(cols(0)), col(cols(1)), col(cols(2)))
+    val narrowScan = pre ne df
     val base0 = pre
       .select(
         col(cols(0)).cast("string").as("g"),

@@ -239,7 +239,7 @@ object Similarity {
     * stays a few partitions. Spherical k-means (assign by cosine,
     * recompute by per-dimension mean) matches the query metric. */
   private val NList = 16
-  private val NProbe = 5 // IvfCalib: recall 6-7/10 at ~31% scan on this corpus
+  private val NProbe = 5 // calibrated: recall 6-7/10 at ~31% scan on this corpus
   private val LloydIters = 3
 
   private val ivfCache = new java.util.concurrent.ConcurrentHashMap[

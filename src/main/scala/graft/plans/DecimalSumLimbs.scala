@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
@@ -45,18 +44,15 @@ import org.apache.spark.sql.types.{Decimal, DecimalType, LongType}
   * child is referenced by all four limbs; hash-aggregate codegen CSEs
   * the shared UnscaledValue, but replication would change RESULTS for
   * a non-deterministic child). FILTER clauses carry to every limb.
-  * Escape hatch: `spark.graft.optimizer.decimalSumLimbs=false`.
+  * It is the only limb implementation: [[graft.functions.Cols.dsum]]
+  * writes the plain decimal SUM and leaves the split to this rule.
   */
-case class DecimalSumLimbs(session: SparkSession) extends Rule[LogicalPlan] {
+object DecimalSumLimbs extends Rule[LogicalPlan] {
 
   private val B = 65536L
 
-  private def enabled: Boolean =
-    session.conf.get("spark.graft.optimizer.decimalSumLimbs", "true") == "true"
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transform {
+    plan.transform {
       case agg: Aggregate =>
         val rewritten = agg.aggregateExpressions.map { ne =>
           ne.transform {

@@ -1,27 +1,30 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 import graft.functions.Cols
 
-/** The r18 limb-summed [[Cols.dsum]]/[[Cols.dsum4]] must be
-  * BIT-IDENTICAL to the decimal-SUM formulation they replaced —
-  * `CAST(SUM(CAST(c AS DECIMAL(18,s))) AS DOUBLE)` — on any input the
-  * old form accepted: the per-row decimal cast (the cross-engine
-  * rounding anchor) is unchanged, only the summation leaves decimal
-  * space (four base-2^16 long limbs recombined exactly per group).
-  * Checked on seeded random data with negatives, nulls, full-precision
-  * doubles (not on the 2-decimal grid — the cast must do the rounding),
-  * many groups, and a single-row group. */
+/** [[Cols.dsum]]/[[Cols.dsum4]] write a DECIMAL(18,s) SUM, which the
+  * session-wide [[graft.plans.DecimalSumLimbs]] rule rewrites into four
+  * base-2^16 long limb sums recombined exactly per group. The result
+  * must be BIT-IDENTICAL to a decimal SUM the rule leaves alone —
+  * `CAST(SUM(CAST(c AS DECIMAL(38,s))) AS DOUBLE)`: the rule skips
+  * precision > 18, and for these inputs the (38,s) cast rounds each
+  * row exactly like the (18,s) one (same setScale(s, HALF_UP) on the
+  * same double). Checked on seeded random data with negatives, nulls,
+  * full-precision doubles (not on the 2-decimal grid — the cast must do
+  * the rounding), many groups, and a single-row group; and the plan is
+  * checked to carry the limb sums, so a rule that stops firing fails
+  * here, not only as a ~5× slower moment aggregation. */
 class DecSumSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def oldDsum(c: org.apache.spark.sql.Column, scale: Int) =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
-  private def oldDsum38(c: org.apache.spark.sql.Column) =
-    sum(c.cast(DecimalType(38, 4))).cast("double")
+  private def ref(c: org.apache.spark.sql.Column, scale: Int) =
+    sum(c.cast(DecimalType(38, scale))).cast("double")
 
   private def check(rows: Seq[(String, java.lang.Double)], label: String): Unit = {
     val s = spark
@@ -33,8 +36,8 @@ class DecSumSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) ->
         (r.get(1), r.get(2), r.get(3))).toMap
     val want = df.groupBy("g")
-      .agg(oldDsum(col("v"), 2).as("s2"), oldDsum38(col("v") * col("v")).as("s4"),
-        oldDsum(col("v"), 4).as("s2b"))
+      .agg(ref(col("v"), 2).as("s2"), ref(col("v") * col("v"), 4).as("s4"),
+        ref(col("v"), 4).as("s2b"))
       .collect().map(r => r.getString(0) ->
         (r.get(1), r.get(2), r.get(3))).toMap
     assert(got.keySet == want.keySet, label)
@@ -75,7 +78,22 @@ class DecSumSpec extends AnyFunSuite {
     check(rows, "nulls")
     val empty = Seq.empty[(String, Double)].toDF("g", "v")
     val r = empty.agg(Cols.dsum(col("v")).as("s")).collect()
-    val w = empty.agg(oldDsum(col("v"), 2).as("s")).collect()
+    val w = empty.agg(ref(col("v"), 2).as("s")).collect()
     assert(r.head.get(0) == w.head.get(0)) // both NULL
+  }
+
+  test("the optimized plan sums long limbs, never a decimal") {
+    val s = spark
+    import s.implicits._
+    val df = Seq(("a", 1.5), ("b", -2.25)).toDF("g", "v")
+    def sums(agg: org.apache.spark.sql.DataFrame): Seq[Sum] =
+      agg.queryExecution.optimizedPlan.collect { case a: Aggregate =>
+        a.aggregateExpressions.flatMap(_.collect { case x: Sum => x }) }.flatten
+    val got = sums(df.groupBy("g").agg(Cols.dsum(col("v")), Cols.dsum4(col("v") * col("v"))))
+    assert(got.map(_.child.dataType) == Seq.fill(8)(LongType), got)
+    // the reference keeps its decimal SUM, so the value checks compare
+    // the limb form against an unrewritten decimal sum
+    val want = sums(df.groupBy("g").agg(ref(col("v"), 2)))
+    assert(want.map(_.child.dataType) == Seq(DecimalType(38, 2)), want)
   }
 }

@@ -1,9 +1,12 @@
 #!/usr/bin/env python3
-"""Merge chunked BenchFocus JSON lines into one BENCHFOCUS file.
+"""Merge chunked `Probe reps` JSON lines into one BENCHFOCUS file.
 
-Each chunk carries its own `controls` block (BenchFocus measures the five
-pinned controls even when they are not targets). The merged file keeps
-every chunk's raw runs/medians, takes each control's MEDIAN-OF-CHUNKS
+Each chunk file holds the output of one
+`sbt "Test/runMain graft.Probe reps q1,q2,…"` run with sbt's `[info] `
+prefix stripped; its last line must be the JSON record. Each chunk
+carries its own `controls` block (`Probe reps` measures the five pinned
+controls even when they are not targets). The merged file keeps every
+chunk's raw runs/medians, takes each control's MEDIAN-OF-CHUNKS
 median (ambient noise varies across the ~25 min the chunks span, and the
 median is the robust summary), and recomputes the ambient index from
 those.
